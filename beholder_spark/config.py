@@ -800,8 +800,7 @@ def run_config_stream(
     from a downstream batch read of the manifested stages. Returns the
     started StreamingQuery.
     """
-    from beholder_spark.plans import lineage as ln
-    from beholder_spark.streaming import write_manifested_stream
+    from beholder_spark.streaming import batch_key_col, commit_micro_batch, write_manifested_stream
 
     compiled = compile_config(config_text)
     # stream_df=None → SELF-SOURCING streaming config: the top-level
@@ -834,8 +833,6 @@ def run_config_stream(
         # files' rows. K sinks therefore recompute their transform
         # suffixes from the (small) spool micro-batch: correctness over
         # cached-once economics.
-        from beholder_spark.streaming import batch_key_col
-
         batch_final = compiled(batch_df)  # recaptures sinks in batch mode
         key = batch_key_col(batch_id)
         frames = [(f"sink_{i}", s) for i, s in enumerate(compiled.sinks)]
@@ -843,14 +840,7 @@ def run_config_stream(
         for st, spec in frames:
             frame = spec["df"]
             extra = [f for f in spec.get("partition_fields", []) if f in frame.columns]
-            ln.run_stage(
-                frame.sparkSession,
-                out_root,
-                st,
-                frame.withColumn("_batch", key),
-                partition_col="_batch",
-                partition_by=extra,
-            )
+            commit_micro_batch(frame.withColumn("_batch", key), out_root, st, partition_by=extra)
 
     w = source_stream.writeStream.foreachBatch(write_batch).option(
         "checkpointLocation", checkpoint_path

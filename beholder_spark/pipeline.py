@@ -237,7 +237,9 @@ def run_curation_pipeline(
     scored = textstats.with_fingerprint(
         webtext.with_repetition_stats(textstats.with_quality(docs))
     )
-    scored_tbl = ln.run_stage(spark, out_root, "scored", scored, partition_col="lang")
+    scored_tbl = ln.run_stage(
+        spark, out_root, "scored", scored, partition_col="lang", partition_by=["lang"]
+    )
 
     w = Window.partitionBy("fingerprint").orderBy("doc_id")
     kept = (
@@ -249,7 +251,9 @@ def run_curation_pipeline(
         (F.col("n_tokens") >= min_tokens)
         & (F.col("dup_word_ratio") <= max_dup_word_ratio)
     )
-    curated_tbl = ln.run_stage(spark, out_root, "curated", curated, partition_col="lang")
+    curated_tbl = ln.run_stage(
+        spark, out_root, "curated", curated, partition_col="lang", partition_by=["lang"]
+    )
     return {"scored": scored_tbl, "curated": curated_tbl}
 
 
@@ -307,7 +311,7 @@ def run_pages_pipeline(
             "routed",
             routed.drop(*sink_drop),
             partition_col="day",
-            partition_by=["route"],
+            partition_by=["day", "route"],
             extra_metrics={
                 "parse_failures": F.count_if(~F.col("parse_ok")),
                 "dropped": F.count_if(F.col("route") == ro.UNMATCHED),

@@ -3233,6 +3233,7 @@ def config_internal_log_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "curate",
             docs.select("doc_id", "lang", "text"),
             partition_col="lang",
+            partition_by=["lang"],
             extra_metrics={"parse_failures": F.count_if(F.length("text") < 200)},
         )
         open(marker, "w").close()

@@ -116,4 +116,11 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # Spark warns "All paths were ignored" on every by-path read of a
+    # directory whose name starts with '_' — the engine's own _manifest
+    # and _lineage tables, whose reads succeed — so keep that logger at ERROR
+    log4j = spark._jvm.org.apache.logging.log4j
+    log4j.core.config.Configurator.setLevel(
+        "org.apache.spark.sql.execution.datasources.DataSource", log4j.Level.ERROR
+    )
     return spark

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from beholder_spark.pipeline import compile_pipeline
+from beholder_spark.plans import lineage as ln
 
 
 def read_pages_stream(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
@@ -132,6 +133,26 @@ def batch_key_col(batch_id: int):
     )
 
 
+def commit_micro_batch(
+    keyed: DataFrame,
+    out_root: str,
+    stage: str,
+    partition_by: list[str] | None = None,
+    extra_lineage: dict[str, int] | None = None,
+) -> None:
+    """Commit one micro-batch that already carries its ``_batch`` key
+    column through :func:`beholder_spark.plans.lineage.run_stage`. The key
+    stays a data column (not a directory level) and the batch is
+    rebalanced by it, so AQE coalesces a small micro-batch into ONE
+    writer task: one data file per micro-batch instead of one per key.
+    The manifested read-back is skipped — a sink never reads it."""
+    ln.run_stage(
+        keyed.sparkSession, out_root, stage, keyed.hint("rebalance", "_batch"),
+        partition_col="_batch", partition_by=partition_by,
+        extra_lineage=extra_lineage, read_back=False,
+    )
+
+
 def write_manifested_stream(
     stream: DataFrame,
     out_root: str,
@@ -146,7 +167,7 @@ def write_manifested_stream(
 
     The streaming checkpoint already dedups batches — until the
     checkpoint is lost or the sink dir is reused. This sink survives
-    both. Each row's manifest partition is ``_batch=f<md5(source file)>``
+    both. Each row's manifest partition is ``_batch = f<md5(source file)>``
     (``input_file_name()``), NOT the micro-batch id: after checkpoint
     loss batch ids restart at 0, and if the source GREW since the
     original run the replayed batch 0 holds old+new files — a
@@ -159,7 +180,7 @@ def write_manifested_stream(
 
     Fallback: when the batch plan erases file provenance (aggregated
     streams, non-file sources — ``input_file_name()`` returns ''), rows
-    key on ``_batch=b<id>`` and the guarantee degrades to the original
+    key on ``_batch = b<id>`` and the guarantee degrades to the original
     one: checkpoint loss is only replay-safe while the source is
     unchanged.
 
@@ -176,8 +197,6 @@ def write_manifested_stream(
     than exactly-once: after checkpoint loss the replayed batch may
     regroup rows and keep a different survivor set.
     """
-    from beholder_spark.plans import lineage as ln
-
     if buffer_rows is not None and order_col is None:
         raise ValueError("buffer_rows requires order_col (deterministic survivor set)")
 
@@ -195,10 +214,7 @@ def write_manifested_stream(
                 # partition top-N then merge, never a full global sort
                 b = b.orderBy(order_col).limit(buffer_rows)
                 dropped = n_in - buffer_rows
-        ln.run_stage(
-            b.sparkSession, out_root, stage, b, partition_col="_batch",
-            extra_lineage={"dropped_overflow": dropped},
-        )
+        commit_micro_batch(b, out_root, stage, extra_lineage={"dropped_overflow": dropped})
 
     w = (
         stream.writeStream.foreachBatch(write_batch)

@@ -174,16 +174,10 @@ def test_resume_skips_completed_partitions(pipeline_out, spark, fixture_dir):
     assert res2["routed"].count() == 2000
 
 
-def test_crash_between_data_write_and_manifest_no_duplicates(spark, tmp_path, monkeypatch):
-    """Crash-atomicity: a failure AFTER the stage data write but BEFORE
-    the manifest append must not produce duplicate rows when the run is
-    resumed. The orphaned run_id directory stays on disk (proven below)
-    but is invisible to manifested reads, and the partition re-runs under
-    a fresh run_id."""
+def _days_df(spark):
     import datetime as dt
-    import os
 
-    df = spark.createDataFrame(
+    return spark.createDataFrame(
         [
             (1, dt.date(2026, 1, 1), "a"),
             (2, dt.date(2026, 1, 1), "b"),
@@ -191,6 +185,17 @@ def test_crash_between_data_write_and_manifest_no_duplicates(spark, tmp_path, mo
         ],
         ["id", "day", "v"],
     )
+
+
+def test_crash_between_data_write_and_manifest_no_duplicates(spark, tmp_path, monkeypatch):
+    """Crash-atomicity: a failure AFTER the stage data write but BEFORE
+    the manifest append must not produce duplicate rows when the run is
+    resumed. The orphaned run_id directory stays on disk (proven below)
+    but is invisible to manifested reads, and the partition re-runs under
+    a fresh run_id."""
+    import os
+
+    df = _days_df(spark)
     root = str(tmp_path / "root")
     real_append = ln._append
 
@@ -217,6 +222,98 @@ def test_crash_between_data_write_and_manifest_no_duplicates(spark, tmp_path, mo
     assert again.count() == 3
     lin = ln.read_lineage(spark, root).toPandas()
     assert sorted(lin.rows_out.tolist()) == [0, 3]  # crash run never logged
+
+
+def test_crash_before_manifest_rename_is_invisible(spark, tmp_path, monkeypatch):
+    """A crash after the manifest's temp file is written but before its
+    rename: the hidden temp file is on disk, yet the manifest reads as
+    absent, the stage table stays readable (and empty), and a resume
+    commits every row exactly once."""
+    import os
+
+    df = _days_df(spark)
+    root = str(tmp_path / "root")
+    real_fs = ln._fs
+
+    class CrashOnRename:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+        def rename(self, src, dst):
+            raise RuntimeError("injected crash: temp file written, not renamed")
+
+    def crashing_fs(spark_, path):
+        fs, path_cls = real_fs(spark_, path)
+        return (CrashOnRename(fs) if path.endswith(ln.MANIFEST) else fs), path_cls
+
+    monkeypatch.setattr(ln, "_fs", crashing_fs)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        ln.run_stage(spark, root, "s", df, partition_col="day", partition_by=["day"])
+    monkeypatch.setattr(ln, "_fs", real_fs)
+
+    names = os.listdir(os.path.join(root, ln.MANIFEST))
+    assert any(n.startswith(".part-") and n.endswith(".tmp") for n in names), names
+    assert ln.read_manifest(spark, root) is None
+    assert ln.read_lineage(spark, root) is None
+    assert ln.read_stage(spark, root, "s", "day").count() == 0
+
+    out = ln.run_stage(spark, root, "s", df, partition_col="day", partition_by=["day"])
+    assert sorted(r.id for r in out.select("id").collect()) == [1, 2, 3]
+    again = ln.run_stage(spark, root, "s", df, partition_col="day", partition_by=["day"])
+    assert again.count() == 3
+    assert sorted(ln.read_lineage(spark, root).toPandas().rows_out.tolist()) == [0, 3]
+    assert ln.read_manifest(spark, root).count() == 2  # one row per day, once
+
+
+def test_bookkeeping_append_submits_no_spark_job(spark, tmp_path):
+    """The driver writes _manifest/_lineage itself: an append is not a
+    Spark job (the data write is a commit's only job)."""
+    sc = spark.sparkContext
+    group = "bookkeeping-append-jobs"
+    root = str(tmp_path / "root")
+    sc.setJobGroup(group, "bookkeeping appends")
+    try:
+        ln._append(spark, root, ln.MANIFEST, [{"stage": "s", "partition": "p", "run_id": "r1"}])
+        ln._append(spark, root, ln.LINEAGE, [{"stage": "s", "run_id": "r1", "rows_out": 3}])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert ln.read_manifest(spark, root).count() == 1
+
+
+def test_bookkeeping_reads_old_and_new_files_as_one_table(spark, tmp_path):
+    """A root holding Spark-written bookkeeping files (the previous
+    createDataFrame(rows) appends) plus driver-written ones reads back as
+    one table: _manifest plainly, _lineage with mergeSchema."""
+    import os
+
+    root = str(tmp_path / "root")
+    old_manifest = [{"stage": "old", "partition": "2026-01-01", "run_id": "rold"}]
+    old_lineage = [{
+        "stage": "old", "run_id": "rold", "rows_out": 2, "parse_failures": 0,
+        "dropped": 0, "wall_ms": 10, "n_partitions": 1,
+    }]  # the shape before dropped_overflow existed
+    for table, rows in ((ln.MANIFEST, old_manifest), (ln.LINEAGE, old_lineage)):
+        spark.createDataFrame(rows).coalesce(1).write.mode("append").parquet(
+            os.path.join(root, table)
+        )
+    ln.run_stage(spark, root, "s", _days_df(spark), partition_col="day", partition_by=["day"])
+
+    plain = spark.read.parquet(os.path.join(root, ln.MANIFEST))
+    assert dict(plain.dtypes) == {"partition": "string", "run_id": "string", "stage": "string"}
+    assert plain.count() == 3
+    assert ln.read_manifest(spark, root).count() == 3
+
+    lin = ln.read_lineage(spark, root)
+    types = dict(lin.dtypes)
+    assert types["stage"] == "string" and types["run_id"] == "string"
+    assert {types[c] for c in ("rows_out", "wall_ms", "n_partitions", "dropped_overflow")} == {"bigint"}
+    got = {r.run_id: (r.rows_out, r.dropped_overflow) for r in lin.collect()}
+    assert len(got) == 2 and got.pop("rold") == (2, None)
+    assert list(got.values()) == [(3, 0)]
 
 
 def test_curation_pipeline_checkpointed_resume(spark, tmp_path):

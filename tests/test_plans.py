@@ -9,6 +9,7 @@ checked mechanically so they can't silently regress:
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -304,3 +305,84 @@ def test_connected_components_plan_is_truncated(spark):
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     assert "Join" not in plan and "Aggregate" not in plan, plan
     assert out.count() == 41
+
+
+def test_manifested_micro_batch_is_one_file_with_batch_column(spark, tmp_path):
+    """A small micro-batch over several source files (several _batch
+    keys) commits ONE data file directly under its _run_id= directory:
+    the key is a data column, never a directory level, and the rebalance
+    lets AQE coalesce the batch into one writer task."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    from beholder_spark import streaming as st
+    from beholder_spark.plans import lineage as ln
+
+    src = str(tmp_path / "src")
+    for lo in (0, 20, 40):
+        spark.range(lo, lo + 20).coalesce(1).write.mode("append").parquet(src)
+    out = str(tmp_path / "out")
+    stream = spark.readStream.schema("id long").parquet(src)
+    st.write_manifested_stream(stream, out, "events", str(tmp_path / "ckpt")).awaitTermination(120)
+
+    stage_dir = os.path.join(out, "events")
+    run_dirs = [d for d in os.listdir(stage_dir) if not d.startswith(("_SUCCESS", "."))]
+    assert len(run_dirs) == 1 and run_dirs[0].startswith(f"{ln.RUN_COL}="), run_dirs
+    files = glob.glob(os.path.join(stage_dir, run_dirs[0], "*.parquet"))
+    assert len(files) == 1, files  # no _batch=… subdirectories either
+    assert "_batch" in pq.read_schema(files[0]).names
+
+    got = ln.read_stage(spark, out, "events", "_batch")
+    assert got.count() == 60
+    assert got.select("_batch").distinct().count() == 3  # one key per source file
+
+
+@pytest.mark.xfail(
+    strict=True,
+    reason="config daemon path keys _batch above the parse-syslog ArrowEvalPython node, "
+    "where input_file_name() reports the file the scan last opened",
+)
+def test_config_stream_batch_key_names_each_rows_own_file(spark, tmp_path):
+    """Known defect: run_config_stream computes the file-keyed manifest
+    partition on the FINAL frame, above the `parse syslog` Arrow UDF. When
+    one scan task reads several spool files, input_file_name() there names
+    whichever file the scan last opened, so rows carry another file's
+    _batch key — which breaks the file-keyed replay guarantee after a
+    streaming-checkpoint loss."""
+    from beholder_spark import config as C
+    from beholder_spark.plans import lineage as ln
+
+    src = tmp_path / "spool"
+    src.mkdir()
+    for f in range(8):
+        (src / f"s{f}.log").write_text(
+            "".join(f"<13>1 2026-03-01T00:00:00Z h p - - - file={f} i={i}\n" for i in range(50))
+        )
+    cfg = "parse syslog keep-unparsed; keep $payload $parse_ok;"
+    stream = spark.readStream.text(str(src)).withColumnRenamed("value", "payload")
+    # every spool file in one scan task, as in a busy daemon micro-batch
+    spark.conf.set("spark.sql.files.minPartitionNum", "1")
+    try:
+        C.run_config_stream(
+            spark, stream, cfg, str(tmp_path / "out"), str(tmp_path / "ckpt")
+        ).awaitTermination(120)
+    finally:
+        spark.conf.unset("spark.sql.files.minPartitionNum")
+
+    own_key = {
+        r.f: r.key
+        for r in spark.read.text(str(src))
+        .select(
+            F.regexp_extract("value", r"file=(\d+)", 1).alias("f"),
+            F.concat(F.lit("f"), F.md5(F.input_file_name())).alias("key"),
+        )
+        .distinct()
+        .collect()
+    }
+    got = ln.read_stage(spark, str(tmp_path / "out"), "config_sink", "_batch")
+    rows = got.select(F.regexp_extract("payload", r"file=(\d+)", 1).alias("f"), "_batch").collect()
+    assert len(rows) == 400
+    wrong = sum(1 for r in rows if own_key[r.f] != r._batch)
+    assert wrong == 0, f"{wrong} of {len(rows)} rows carry another file's _batch key"
